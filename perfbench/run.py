@@ -50,7 +50,8 @@ End-to-end metrics (``--trace 0``):
 session with Spark's event log on (uncompressed, parsed with the stdlib),
 and prints the per-layer metrics of ``LAYER_METRICS`` instead, including
 the tracing overhead (traced minus untraced) of each timed end-to-end
-metric. The backlog_router traced run also drains one backlog file on
+metric. Each backlog phase is one drain; each paced phase is a window of
+half of ``--seconds``. The backlog_router traced run also drains one backlog file on
 ``local[1]`` (``x1.rows_per_s``); the paced_spool one also drains a small
 keyed spool through ``Pipeline.start_stateful`` (``state.*``). A metric a
 workload cannot measure reads 0 and its reason is recorded. Host noise is
@@ -99,7 +100,10 @@ TMP_PARENT = os.path.join(ROOT, ".perfbench_tmp")
 OUT_DIR = os.path.join(ROOT, ".perfbench_out")
 
 CPUS = min(4, len(os.sched_getaffinity(0)))
-SHUFFLE_PARTITIONS = 8
+# one shuffle task per core: with more, every stage of a small paced
+# micro-batch runs in several waves and the JVM's task threads, the Python
+# workers and the JIT crowd the cores, which makes trigger times jittery
+SHUFFLE_PARTITIONS = CPUS
 # The driver heap is fixed and pre-touched, so peak memory does not depend
 # on when the JVM happens to grow its heap; it moves with everything else
 # (Python workers, off-heap buffers, metaspace, the driver process).
@@ -299,21 +303,34 @@ def spool_source(path: str, admit: int):
     )
 
 
-def drain(run: Run, source, rows: int, hook, label: str):
-    """One ``availableNow`` drain of ``source`` through a fresh pipeline."""
+def drain(run: Run, source, rows: int, hook, label: str, paced: bool = False):
+    """One drain of ``source`` through a fresh pipeline: ``availableNow``,
+    or with ``paced`` the paced window's ``processingTime="0 seconds"``
+    trigger, stopped once ``rows`` rows are committed."""
     base = run.path(label)
     pipe = Pipeline(P.router_config(f"{label}-{run._n}", base, hook), source)
     t0 = time.time()
-    q = pipe.start(run.spark)
+    if paced:
+        q = pipe.start(run.spark, trigger="processingTime", processing_time="0 seconds")
+    else:
+        q = pipe.start(run.spark)
     t1 = time.time()
     run.tracer.add("Pipeline.start", t0, t1, run.tracer.current, label=label)
-    if not q.awaitTermination(run.remaining()):
-        q.stop()
-        raise TimeoutError(f"{label} drain did not finish")
-    if q.exception() is not None:
-        raise RuntimeError(f"{label} drain failed: {q.exception()}")
+    if paced:
+        try:
+            P.wait_for_rows(q, rows, time.time() + run.remaining())
+        finally:
+            progress = P.progress_list(q)
+            q.stop()
+    else:
+        if not q.awaitTermination(run.remaining()):
+            q.stop()
+            raise TimeoutError(f"{label} drain did not finish")
+        if q.exception() is not None:
+            raise RuntimeError(f"{label} drain failed: {q.exception()}")
+        progress = P.progress_list(q)
     t2 = time.time()
-    return P.Drain(base, rows, t0, t1 - t0, t2 - t0, P.progress_list(q))
+    return P.Drain(base, rows, t0, t1 - t0, t2 - t0, progress)
 
 
 def warm_source(run: Run, kind: str, i: int, rows: int | None = None):
@@ -328,14 +345,18 @@ def warm_source(run: Run, kind: str, i: int, rows: int | None = None):
 
 def setup(run: Run, kind: str, make_inputs) -> tuple[float, object]:
     """SETUP_REPS times: generate the measured inputs and drain one
-    warm-up file through a fresh pipeline. Returns the median rep time
-    and the last rep's inputs."""
+    warm-up file through a fresh pipeline under the trigger the measured
+    phase uses, so the warm-up runs the timed triggers' code path.
+    Returns the median rep time and the last rep's inputs."""
     reps, inputs = [], None
     for i in range(SETUP_REPS):
         with run.tracer.span("setup_rep", rep=i):
             t0 = time.time()
             inputs = make_inputs()
-            drain(run, warm_source(run, kind, i), WARM_EVENTS[kind], P.handle_batch, "warm")
+            drain(
+                run, warm_source(run, kind, i), WARM_EVENTS[kind], P.handle_batch,
+                "warm", paced=kind == "spool",
+            )
             reps.append(time.time() - t0)
     run.notes["setup_rep_s"] = reps
     return statistics.median(reps), inputs
@@ -512,9 +533,12 @@ def workload_paced(run: Run, trace: bool):
         with run.tracer.span("measure"):
             m, _, _, result = run_paced(run, run.args.seconds, P.handle_batch, "paced")
         return {**e2e, **m}, result, None
-    untraced, _, _, r0 = run_paced(run, run.args.seconds, P.handle_batch, "untraced")
+    # the untraced and traced windows are half as long as an untraced
+    # run's, so a traced run stays well inside the run deadline
+    half = run.args.seconds / 2
+    untraced, _, _, r0 = run_paced(run, half, P.handle_batch, "untraced")
     layers, traced, r1, paced = traced_phase(
-        run, lambda hook: run_paced(run, run.args.seconds, hook, "traced"), None
+        run, lambda hook: run_paced(run, half, hook, "traced"), None
     )
     layers["gen.late_ms_max"] = paced.late_ms_max
     r2 = state_probe(run, layers)
