@@ -295,9 +295,10 @@ def main() -> None:
             if consecutive_ok >= 2:
                 break
             # confirm shortly: a second good probe a few seconds later
-            # separates a stable window from one lucky sample.
-            if time.time() - wait_t0 + confirm_gap_s > wait_deadline:
-                break
+            # separates a stable window from one lucky sample. It is
+            # always taken, so the deadline stretches by at most
+            # confirm_gap_s (plus that probe) and a lone good probe is
+            # never accepted.
             time.sleep(confirm_gap_s)
             continue
         consecutive_ok = 0

@@ -21,7 +21,10 @@ bounded by the key domain.
 
 ``apply_per_batch`` is the ``handle_batch/4`` analogue
 (``lib/broadway.ex:1001-1029``): one pandas DataFrame per materialized
-batch via Arrow-vectorized ``applyInPandas``.
+batch via Arrow-vectorized ``applyInPandas``. ``apply_per_batch_streamed``
+keeps that contract with one Python entry per Arrow chunk;
+``apply_per_batch_local`` is its runner alone, for input already
+partitioned by the group key (the router's chunked frame).
 """
 
 from __future__ import annotations
@@ -269,14 +272,36 @@ def apply_per_batch_streamed(
     ``applyInPandas`` makes one Python roundtrip per GROUP — at
     millions of small batch keys the fixed ~ms cost per group dwarfs
     the work (measured 14× over the JVM equivalent at 1500 groups).
-    Here rows are hash-repartitioned and sorted by key, and each
-    partition streams through ``mapInPandas`` as large Arrow chunks;
-    group boundaries are cut client-side (a group's rows are contiguous
-    after the sort, and the chunk tail holding a possibly-unfinished
-    group is carried into the next chunk). ``fn`` still sees exactly
+    Here rows are hash-repartitioned by key and handed to
+    ``apply_per_batch_local``, which streams each partition through
+    ``mapInPandas`` as large Arrow chunks. ``fn`` still sees exactly
     one complete pandas DataFrame per batch — the handle_batch contract
     is unchanged — but Python is entered once per Arrow chunk, not once
     per key.
+    """
+    key_cols = list(key_cols)
+    n = num_partitions or shuffle_partitions(df.sparkSession)
+    return apply_per_batch_local(
+        df.repartition(n, *key_cols), key_cols, fn, schema
+    )
+
+
+def apply_per_batch_local(
+    df: DataFrame,
+    key_cols: Sequence[str],
+    fn: Callable[[pd.DataFrame], pd.DataFrame],
+    schema: str,
+) -> DataFrame:
+    """The group-cut runner behind ``apply_per_batch_streamed``, for
+    input whose groups each already sit inside one partition (e.g. the
+    output of a window or repartition keyed by a prefix of
+    ``key_cols``) — no exchange is added.
+
+    Each partition is sorted by key and streams through ``mapInPandas``;
+    group boundaries are cut client-side (a group's rows are contiguous
+    after the sort, and the chunk tail holding a possibly-unfinished
+    group is carried into the next chunk). A group split across
+    partitions would reach ``fn`` once per partition.
 
     Memory bound: one Arrow chunk + one in-flight group per task, same
     order as applyInPandas's largest-group bound. Keys must be
@@ -284,9 +309,7 @@ def apply_per_batch_streamed(
     equality would mis-cut the carry tail).
     """
     key_cols = list(key_cols)
-    spark = df.sparkSession
-    n = num_partitions or shuffle_partitions(spark)
-    parted = df.repartition(n, *key_cols).sortWithinPartitions(*key_cols)
+    parted = df.sortWithinPartitions(*key_cols)
 
     def runner(chunks):
         carry: pd.DataFrame | None = None

@@ -8,10 +8,12 @@ acknowledger stages (SURVEY §3.2 steps 4-6). Per micro-batch:
    and the ack log — one compute, many consumers)
 2. failed rows → ``handle_failed`` hook → DLQ sink → acked as failed
    (reference ``acknowledger.ex:96-150``)
-3. ok rows, per batcher: chunk per batch_key by size or weight budget
-   (``batcher_stage.ex:108-221``), run ``handle_batch`` as
-   ``applyInPandas`` over (batch_key, chunk) groups
-   (``batch_processor_stage.ex:52-127``), write the batcher's sink
+3. ok rows, all batchers in one keyed pass: chunk per (batcher,
+   batch_key) by each batcher's size or weight budget
+   (``batcher_stage.ex:108-221``), run ``handle_batch`` once over the
+   (batcher, batch_key, chunk) groups
+   (``batch_processor_stage.ex:52-127``), persist that one frame and
+   write each batcher's sink from it
 4. append the ack log — the bulk-ack analogue of
    ``acknowledger.ex:63-85``'s one-ack-call-per-source-handle, keyed by
    (batch_id, ack_ref) so at-least-once reruns are deduplicatable
@@ -22,8 +24,10 @@ chunk of a micro-batch is 'timeout' (the micro-batch boundary plays the
 role of the batch-timeout timer), and 'flush' when the row's
 batch_mode is 'flush'.
 
-Scale notes: the only shuffle is the per-batcher chunking window keyed
-by batch_key; consumer-mode pipelines (no batchers) are shuffle-free.
+Scale notes: the only shuffle is one hash exchange on (batcher,
+batch_key) per micro-batch, however many batchers the topology has.
+The chunking window, the batch-size window and the hook all run inside
+its partitions; consumer-mode pipelines (no batchers) are shuffle-free.
 Sinks receive partition-parallel writes; nothing funnels through the
 driver.
 """
@@ -38,11 +42,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from broadway_spark.config import TopologyConfig
-from broadway_spark.operators.batching import (
-    apply_per_batch_streamed,
-    chunk_by_budget,
-    chunk_by_size,
-)
+from broadway_spark.operators.batching import apply_per_batch_local
+from broadway_spark.operators.materialize import shuffle_partitions
 
 ACK_LOG_SCHEMA = (
     "batch_id long, ack_ref string, ack_data string, outcome string, "
@@ -90,15 +91,16 @@ def _ack_rows(
     )
 
 
-def _make_batch_hook(batcher_name: str, hook, order_col: str):
-    """Wrap the user's handle_batch for applyInPandas (single-arg),
-    presenting rows in processing order (Broadway delivers batches in
-    arrival order per key) and enforcing the all-messages contract
-    (batch_processor_stage.ex:78-84)."""
+def _make_batch_hook(hook, order_col: str):
+    """Wrap the user's handle_batch for the group-cut runner
+    (single-arg): dispatch to ``hook(batcher_name, pdf)`` by the group's
+    ``batcher`` value, present rows in processing order (Broadway
+    delivers batches in arrival order per key) and enforce the
+    all-messages contract (batch_processor_stage.ex:78-84)."""
 
     def per_batch(pdf):
         pdf = pdf.sort_values(order_col).reset_index(drop=True)
-        out = hook(batcher_name, pdf)
+        out = hook(pdf["batcher"].iat[0], pdf)
         if len(out) != len(pdf):
             raise RuntimeError(
                 "handle_batch must return exactly the messages it "
@@ -107,6 +109,53 @@ def _make_batch_hook(batcher_name: str, hook, order_col: str):
         return out
 
     return per_batch
+
+
+def _chunk_batchers(ok: DataFrame, config: TopologyConfig) -> DataFrame:
+    """Every batcher's chunking in one keyed pass.
+
+    The ok rows of the configured batchers are hash-partitioned once on
+    (batcher, batch_key); one window over that key, ordered by
+    ``order_by``, assigns ``chunk_id`` with each batcher's own formula
+    picked by a CASE on ``batcher`` — ``chunk_by_size``'s
+    ``floor((row_number - 1) / size)`` or ``chunk_by_budget``'s
+    exclusive running weight sum over the budget. ``batch_size_`` and
+    ``trigger_`` come from a second window over (batcher, batch_key,
+    chunk_id), which the same exchange already satisfies.
+    """
+    keyed = ok.filter(F.col("batcher").isin(list(config.batchers))).repartition(
+        shuffle_partitions(ok.sparkSession), "batcher", "batch_key"
+    )
+    w = (
+        Window.partitionBy("batcher", "batch_key")
+        .orderBy(config.order_by)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    row_number = F.row_number().over(w)
+    chunk_id = size_lit = None
+    for name, bcfg in config.batchers.items():
+        is_name = F.col("batcher") == name
+        if isinstance(bcfg.batch_size, tuple):
+            weight_col, budget = bcfg.batch_size
+            weight = F.col(weight_col)
+            expr = F.floor((F.sum(weight).over(w) - weight) / F.lit(budget))
+            size = F.lit(None).cast("int")
+        else:
+            expr = F.floor((row_number - F.lit(1)) / F.lit(bcfg.batch_size))
+            size = F.lit(bcfg.batch_size)
+        chunk_id = (F if chunk_id is None else chunk_id).when(is_name, expr)
+        size_lit = (F if size_lit is None else size_lit).when(is_name, size)
+    chunked = keyed.withColumn("chunk_id", chunk_id)
+    batch_size = F.count(F.lit(1)).over(
+        Window.partitionBy("batcher", "batch_key", "chunk_id")
+    )
+    chunked = chunked.withColumn("batch_size_", batch_size.cast("int"))
+    trigger = (
+        F.when(F.col("batch_mode") == "flush", F.lit("flush"))
+        .when(F.col("batch_size_") == size_lit, F.lit("size"))
+        .otherwise(F.lit("timeout"))
+    )
+    return chunked.withColumn("trigger_", trigger)
 
 
 def build_router(
@@ -287,7 +336,6 @@ def build_router(
                 )
                 ack_parts.append(_ack_rows(late_ok, batch_id, "ok"))
             else:
-                order_col = config.order_by
                 per_batcher: dict[str, int] = {}
                 if rec is not None:
                     per_batcher = {
@@ -296,9 +344,7 @@ def build_router(
                         .agg(F.count(F.lit(1)).alias("n"))
                         .collect()
                     }
-                for name, bcfg in config.batchers.items():
-                    sub = ok.filter(F.col("batcher") == name)
-                    if rec is not None:
+                    for name in config.batchers:
                         rec.emit(
                             "batcher:start",
                             {"system_time": time.time()},
@@ -309,53 +355,27 @@ def build_router(
                                 "messages": per_batcher.get(name, 0),
                             },
                         )
-                    _t0 = time.monotonic()
-                    if isinstance(bcfg.batch_size, tuple):
-                        weight_col, budget = bcfg.batch_size
-                        chunked = chunk_by_budget(
-                            sub, ["batch_key"], order_col, weight_col, budget
-                        )
-                        size_lit = None
-                    else:
-                        chunked = chunk_by_size(
-                            sub, ["batch_key"], order_col, bcfg.batch_size
-                        )
-                        size_lit = bcfg.batch_size
-                    w = Window.partitionBy("batch_key", "chunk_id")
-                    chunked = chunked.withColumn(
-                        "batch_size_", F.count(F.lit(1)).over(w).cast("int")
+                _t0 = time.monotonic()
+                chunked = _chunk_batchers(ok, config)
+                if config.handle_batch is not None:
+                    # Groups already sit inside one partition of the
+                    # (batcher, batch_key) exchange: the streamed runner
+                    # enters Python once per Arrow chunk, not once per
+                    # (batcher, batch_key, chunk) group.
+                    chunked = apply_per_batch_local(
+                        chunked,
+                        ["batcher", "batch_key", "chunk_id"],
+                        _make_batch_hook(config.handle_batch, config.order_by),
+                        schema=chunked.schema,
                     )
-                    trigger = (
-                        F.when(F.col("batch_mode") == "flush", F.lit("flush"))
-                        .when(
-                            F.lit(size_lit is not None)
-                            & (F.col("batch_size_") == F.lit(size_lit or -1)),
-                            F.lit("size"),
-                        )
-                        .otherwise(F.lit("timeout"))
-                    )
-                    chunked = chunked.withColumn("trigger_", trigger)
-
-                    if config.handle_batch is not None:
-                        per_batch = _make_batch_hook(
-                            name, config.handle_batch, order_col
-                        )
-                        # streamed runner: one Python entry per Arrow
-                        # chunk instead of per (batch_key, chunk) group
-                        # — at millions of keys per micro-batch the
-                        # per-group dispatch tax dominates otherwise.
-                        chunked = apply_per_batch_streamed(
-                            chunked,
-                            ["batch_key", "chunk_id"],
-                            per_batch,
-                            schema=chunked.schema,
-                        )
-                        chunked = chunked.persist()
-                        hook_cache.append(chunked)
-                    if rec is not None:
-                        # batcher stage = grouping/annotation (ends
-                        # here); batch_processor = the sink write,
-                        # where handle_batch actually executes.
+                # one compute feeds every batcher's sink and the ack log
+                chunked = chunked.persist()
+                hook_cache.append(chunked)
+                if rec is not None:
+                    # batcher stage = grouping/annotation (ends here);
+                    # batch_processor = the sink write, where
+                    # handle_batch actually executes.
+                    for name in config.batchers:
                         rec.emit(
                             "batcher:stop",
                             {"duration": time.monotonic() - _t0},
@@ -366,6 +386,7 @@ def build_router(
                             },
                         )
 
+                for name in config.batchers:
                     sink = config.sinks[name]
                     span_bp = (
                         rec.span(
@@ -380,25 +401,27 @@ def build_router(
                     )
                     with span_bp:
                         _write(
-                            chunked.drop("chunk_id", "batch_size_", "trigger_"),
+                            chunked.filter(F.col("batcher") == name).drop(
+                                "chunk_id", "batch_size_", "trigger_"
+                            ),
                             sink.path,
                             sink.format,
                             batch_id,
                             sink.idempotent,
                         )
-                    late_chunked = (
-                        chunked.filter(F.col("ack_policy") != "early")
-                        if has_policy
-                        else chunked
+                late_chunked = (
+                    chunked.filter(F.col("ack_policy") != "early")
+                    if has_policy
+                    else chunked
+                )
+                ack_parts.append(
+                    _ack_rows(
+                        late_chunked,
+                        batch_id,
+                        "ok",
+                        trigger_col=F.col("trigger_"),
                     )
-                    ack_parts.append(
-                        _ack_rows(
-                            late_chunked,
-                            batch_id,
-                            "ok",
-                            trigger_col=F.col("trigger_"),
-                        )
-                    )
+                )
 
             if config.ack_log is not None or config.ack_executor is not None:
                 acks = ack_parts[0]
